@@ -6,7 +6,7 @@ as a DAG of pyspark.sql DataFrame stages with vectorized Arrow/pandas UDFs:
 
     documents (doc_id, spans) ──explode media spans──► join media_blobs
         ──mapInArrow decode_detect_ocr──► per-table cell rows
-        ──cogroup(doc_id).applyInPandas assemble──► (doc_id, spans) output
+        ──groupBy(doc_id) + join assemble──► (doc_id, spans) output
 
 All geometry/OCR math is batched NumPy inside Arrow UDFs — never per-row
 Python at the DataFrame level.  See SURVEY.md for the reference mapping.

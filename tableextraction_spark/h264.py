@@ -476,20 +476,6 @@ def _resolve_param_sets(
     return sps, pps
 
 
-def looks_like_annexb(payload) -> bool:
-    """Cheap sniff: an Annex-B start code (3- or 4-byte form) followed by
-    a plausible NAL header (forbidden bit clear, known unit type).  Used
-    by the multimodal router — magic-byte tier, no parsing."""
-    head = bytes(payload[:5])
-    if head[:4] == b"\x00\x00\x00\x01" and len(head) >= 5:
-        hdr = head[4]
-    elif head[:3] == b"\x00\x00\x01" and len(head) >= 4:
-        hdr = head[3]
-    else:
-        return False
-    return not (hdr & 0x80) and (hdr & 0x1F) in (1, 5, 6, 7, 8, 9, 12)
-
-
 def count_annexb_pictures(buf: bytes) -> int:
     """Number of coded pictures in an Annex-B stream, header-only: one per
     slice NAL whose first_mb_in_slice is 0 (EP-strip touches ~8 bytes per
@@ -556,6 +542,16 @@ def iter_h264_annexb_frames(buf: bytes):
         got_any = True
     if not got_any:
         raise ValueError("H264: stream contains no coded pictures")
+
+
+def iter_annexb_video_frames(payload):
+    """Annex-B stream → (frame_no, n_frames, frame) for the video path: the
+    frame count comes up front from the header-only picture scan (the MKV
+    lane's pattern); decode stays one frame live at a time."""
+    buf = bytes(payload)
+    n_pics = count_annexb_pictures(buf)
+    for i, f in enumerate(iter_h264_annexb_frames(buf)):
+        yield i, n_pics, f
 
 
 def decode_h264_annexb(buf: bytes) -> list[np.ndarray]:

@@ -19,7 +19,7 @@ from .assemble import (
     serialize_table,
     remove_hyphenated_words,
 )
-from .page import process_page, scale_bboxes
+from .page import extract_objects, scale_bboxes
 
 __all__ = [
     "binarize",
@@ -38,6 +38,6 @@ __all__ = [
     "serialize_table",
     "remove_hyphenated_words",
     "assemble_table",
-    "process_page",
+    "extract_objects",
     "scale_bboxes",
 ]

@@ -33,41 +33,18 @@ def scale_bboxes(bboxes: np.ndarray, factor: float) -> np.ndarray:
     return (np.asarray(bboxes) * factor).astype(np.int64)
 
 
-def process_page(gray: np.ndarray, min_len_frac: float = 0.04, inset: int = OCR_INSET):
-    """uint8 gray page → list of (table_bbox, cells int[C,4], texts list[str]).
-
-    Tables in reading order; cells in reading order; texts raw (hyphenation
-    cleanup happens at assembly, matching the reference which cleans after
-    OCR — ``recognition.py:151-164``).
-    """
-    gray = grayzation(gray)
-    ink = binarize(gray)
-    horiz, vert = detect_segments(ink, min_len_frac)
-    ocr = resolve_ocr()  # pluggable strategy (template | easyocr | custom)
-    out = []
-    for bbox, hm, vm in cluster_tables(horiz, vert):
-        tw, th = bbox[2] - bbox[0], bbox[3] - bbox[1]
-        eps = max(2, int(0.01 * (tw + th)))  # detection.py ε = 1%·(h+w)
-        nodes = dedup_grid_fixpoint(snap_nodes(intersect_lines(vm, hm, eps), eps))
-        cells = cells_from_nodes(nodes, ink)
-        if len(cells) == 0:
-            continue
-        texts = ocr(
-            [
-                gray[y1 + inset : y2 - inset + 1, x1 + inset : x2 - inset + 1]
-                for x1, y1, x2, y2 in cells
-            ]
-        )
-        out.append((bbox, cells, texts))
-    return out
-
-
 def extract_objects(gray: np.ndarray, classify: bool = False):
-    """uint8 page → list of (kind, n_items, payload) in reading order.
+    """uint8 page → list of (kind, n_items, payload, table) in reading order.
 
-    ``kind='table'`` objects carry the assembled structure JSON (n_items =
-    cell count); on pages with line evidence but no table grid the plot
-    digitizer runs (``kind='plot'``, n_items = point count) — mirroring the
+    The one per-page kernel chain: gray/binarize → lines → table clusters →
+    nodes → cells → OCR → structure build.  ``kind='table'`` objects carry
+    the assembled structure JSON (n_items = cell count) and ``table`` =
+    (bbox, cells int[C,4], texts) — cells in reading order, texts raw
+    (hyphenation cleanup happens at assembly, matching the reference which
+    cleans after OCR — ``recognition.py:151-164``).  ``classify=True``
+    drops tables the keyword classifier rejects.  On pages with line
+    evidence but no table the plot digitizer runs on the same binarization
+    (``kind='plot'``, n_items = point count, ``table`` None) — mirroring the
     reference's table|plot class split (``maskrcnn/class_names.py:2-12``,
     ``plot_processing/PlotProcessing.ipynb``).
     """
@@ -77,12 +54,12 @@ def extract_objects(gray: np.ndarray, classify: bool = False):
 
     gray = grayzation(gray)
     ink = binarize(gray)
-    horiz, vert = detect_segments(ink, min_len_frac=0.04)
+    horiz, vert = detect_segments(ink)
     ocr = resolve_ocr()  # pluggable strategy (template | easyocr | custom)
     objects = []
     for bbox, hm, vm in cluster_tables(horiz, vert):
         tw, th = bbox[2] - bbox[0], bbox[3] - bbox[1]
-        eps = max(2, int(0.01 * (tw + th)))
+        eps = max(2, int(0.01 * (tw + th)))  # detection.py ε = 1%·(h+w)
         nodes = dedup_grid_fixpoint(snap_nodes(intersect_lines(vm, hm, eps), eps))
         cells = cells_from_nodes(nodes, ink)
         if len(cells) == 0:
@@ -95,10 +72,12 @@ def extract_objects(gray: np.ndarray, classify: bool = False):
         )
         if classify and not classify_table(" ".join(texts)):
             continue
-        objects.append(("table", len(cells), assemble_table(cells, texts)))
+        objects.append(
+            ("table", len(cells), assemble_table(cells, texts), (bbox, cells, texts))
+        )
     if not objects:
         plot = digitize_plot(ink, horiz, vert)
         if plot is not None:
             payload, n_points = plot
-            objects.append(("plot", n_points, payload))
+            objects.append(("plot", n_points, payload, None))
     return objects

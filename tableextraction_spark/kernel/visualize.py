@@ -50,10 +50,13 @@ def annotate_page(gray: np.ndarray) -> np.ndarray:
     """Run the detection kernel on a page and draw what it found: table
     bounding boxes (thick) and cell grid (thin) — the one-call equivalent of
     the reference's per-stage visualize calls."""
-    from .page import process_page
+    from .page import extract_objects
 
     out = np.asarray(gray).copy()
-    for bbox, cells, _texts in process_page(gray):
+    for _kind, _n, _payload, table in extract_objects(gray):
+        if table is None:
+            continue  # a digitized plot, not a table
+        bbox, cells, _texts = table
         out = draw_boxes(out, [bbox], thickness=3)
         out = draw_boxes(out, cells, thickness=1)
     return out

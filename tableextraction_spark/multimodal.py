@@ -40,10 +40,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .media import decode_image, encode_image
+from .media import AUD_MAGIC, VID_MAGIC, decode_image, decoder, encode_image, sniff
 
-AUD_MAGIC = b"AUD1"
-VID_MAGIC = b"VID1"
 _AUD_HEADER = struct.Struct("<4sI")  # magic, sample_rate
 _VID_HEADER = struct.Struct("<4sI")  # magic, n_frames
 _LEN = struct.Struct("<I")
@@ -59,27 +57,19 @@ def encode_audio(pcm: np.ndarray, sample_rate: int) -> bytes:
 
 def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
     """AUD1, real WAV, FLAC, or Ogg/Vorbis bytes → (mono int16 PCM,
-    sample_rate)."""
-    magic, rate = _AUD_HEADER.unpack_from(payload, 0)
-    if magic == b"RIFF":
-        return _decode_wav(payload)
-    if magic == b"fLaC":
-        from .flac import decode_flac  # from-scratch lossless decoder
+    sample_rate), routed by the ``media.FORMATS`` row the payload sniffs as."""
+    return decoder(sniff(payload), "audio", payload)(payload)
 
-        return decode_flac(payload)
-    if magic == b"OggS":
-        from .vorbis import decode_ogg_vorbis  # from-scratch Vorbis I
 
-        return decode_ogg_vorbis(payload)
-    if magic != AUD_MAGIC:
-        _raise_real_format(payload, "audio", "soundfile/librosa (MP3)")
+def decode_aud1(payload: bytes) -> tuple[np.ndarray, int]:
+    _magic, rate = _AUD_HEADER.unpack_from(payload, 0)
     if rate <= 0:
         raise ValueError(f"corrupt AUD1 header: sample_rate={rate}")
     pcm = np.frombuffer(payload, dtype=np.int16, offset=_AUD_HEADER.size)
     return pcm, rate
 
 
-def _decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
+def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     """RIFF/WAVE PCM via stdlib ``wave``: 16-bit passes through, 8-bit
     (unsigned per spec) rescales to int16, multi-channel downmixes to mono
     by channel mean.  Compressed chunks (``wave`` raises) and exotic sample
@@ -142,54 +132,20 @@ def encode_video(frames: list[np.ndarray]) -> bytes:
 
 def iter_video_frames(payload: bytes):
     """Lazily yield (frame_no, n_frames, frame) — one decoded frame live at
-    a time, so a 10k-frame video never materializes in memory.  Routes on
-    magic: VID1 (synthetic container), real AVI/MJPEG (RIFF walk, ``avi.py``),
-    animated GIF, MP4/ISO-BMFF with MJPEG or H.264/avc1 samples (box walk
-    + sample tables, ``mp4.py``; I_PCM-coded H.264 decodes natively via
-    ``h264.py``), raw Annex-B H.264 elementary streams, or Matroska/WebM
-    with MJPEG blocks (EBML walk, ``mkv.py``); every container's structure
-    parses natively — only library-bound *codecs* (CAVLC/CABAC H.264
-    residuals, HEVC/VP9/AV1) stay named per-row errors."""
-    magic, n = _VID_HEADER.unpack_from(payload, 0)
-    if len(payload) >= 12 and bytes(payload[4:8]) == b"ftyp":
-        from .mp4 import iter_mp4_mjpeg_frames
+    a time, so a 10k-frame video never materializes in memory.  Routes by
+    the ``media.FORMATS`` row: VID1 (synthetic container), real AVI/MJPEG
+    (RIFF walk, ``avi.py``), animated GIF, MP4/ISO-BMFF with MJPEG or
+    H.264/avc1 samples (box walk + sample tables, ``mp4.py``; I_PCM-coded
+    H.264 decodes natively via ``h264.py``), raw Annex-B H.264 elementary
+    streams, or Matroska/WebM with MJPEG blocks (EBML walk, ``mkv.py``);
+    every container's structure parses natively — only library-bound
+    *codecs* (CAVLC/CABAC H.264 residuals, HEVC/VP9/AV1) stay named per-row
+    errors."""
+    yield from decoder(sniff(payload), "frames", payload)(payload)
 
-        yield from iter_mp4_mjpeg_frames(payload)
-        return
-    from .h264 import looks_like_annexb
 
-    if looks_like_annexb(payload):  # raw H.264 elementary stream
-        from .h264 import count_annexb_pictures, iter_h264_annexb_frames
-
-        buf = bytes(payload)
-        # frame count up front via the header-only picture scan (the MKV
-        # lane's pattern); decode stays one frame live at a time
-        n_pics = count_annexb_pictures(buf)
-        for i, f in enumerate(iter_h264_annexb_frames(buf)):
-            yield i, n_pics, f
-        return
-    if bytes(payload[:4]) == b"\x1aE\xdf\xa3":
-        from .mkv import iter_mkv_mjpeg_frames
-
-        yield from iter_mkv_mjpeg_frames(payload)
-        return
-    if magic == b"RIFF":
-        if bytes(payload[8:12]) != b"AVI ":
-            raise ValueError(
-                f"RIFF payload is not AVI (form {bytes(payload[8:12])!r}) — "
-                f"WAV goes to decode_audio, not the video path"
-            )
-        from .avi import iter_avi_mjpeg_frames
-
-        yield from iter_avi_mjpeg_frames(payload)
-        return
-    if bytes(payload[:3]) == b"GIF":
-        from .gif import iter_gif_frames  # the web's animation format
-
-        yield from iter_gif_frames(payload)
-        return
-    if magic != VID_MAGIC:
-        _raise_real_format(payload, "video", "pyav/ffmpeg (unknown container)")
+def iter_vid1_frames(payload: bytes):
+    _magic, n = _VID_HEADER.unpack_from(payload, 0)
     off = _VID_HEADER.size
     for i in range(n):
         (ln,) = _LEN.unpack_from(payload, off)
@@ -200,15 +156,6 @@ def iter_video_frames(payload: bytes):
 
 def decode_video(payload: bytes) -> list[np.ndarray]:
     return [f for _i, _n, f in iter_video_frames(payload)]
-
-
-def _raise_real_format(payload: bytes, kind: str, lib: str):
-    head = bytes(payload[:4])
-    raise NotImplementedError(
-        f"real {kind} decode (magic {head!r}) requires {lib}, not present in "
-        f"this container; the deploy-time adapter decodes inside the same "
-        f"mapInPandas batch — Spark-side plumbing unchanged"
-    )
 
 
 # Per-row isolation breadth for every mapInPandas stage below: the decoders

@@ -1,5 +1,5 @@
 from .decode_detect import decode_detect_ocr, TABLES_SCHEMA
-from .assemble import assemble_spans_sql, assemble_spans_pandas, SPANS_SCHEMA
+from .assemble import assemble_spans_sql, SPANS_SCHEMA
 from .resume import filter_unprocessed
 from .metrics import stage_metrics
 
@@ -7,7 +7,6 @@ __all__ = [
     "decode_detect_ocr",
     "TABLES_SCHEMA",
     "assemble_spans_sql",
-    "assemble_spans_pandas",
     "SPANS_SCHEMA",
     "filter_unprocessed",
     "stage_metrics",

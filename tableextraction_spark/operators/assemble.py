@@ -1,16 +1,15 @@
 """Per-document span assembly: original interleaved spans + detected table
 spans, ordered, offsets renumbered.
 
-Two equivalent implementations (tests assert they agree):
-
-* :func:`assemble_spans_sql` — **default**.  Pure declarative Catalyst plan:
-  one groupBy on the (tiny) table rows + one join + higher-order array
-  functions (``transform``/``filter``/``flatten``), fully JVM-side
-  whole-stage-codegen.  The document's span array is never exploded and the
-  heavy media payloads are long gone — only JSON strings shuffle.
-* :func:`assemble_spans_pandas` — the SURVEY §2.10 ``cogroup().applyInPandas``
-  formulation (reference stage F driver, ``export.py:21-74``), kept because
-  deployments that post-process structures in Python slot in here.
+* :func:`assemble_spans_sql` — the batch assembly.  Pure declarative
+  Catalyst plan: one groupBy on the (tiny) table rows + one join +
+  higher-order array functions (``transform``/``filter``/``flatten``), fully
+  JVM-side whole-stage-codegen.  The document's span array is never
+  exploded and the heavy media payloads are long gone — only JSON strings
+  shuffle.
+* :func:`merge_doc_spans` — the same merge for one document in Python, used
+  by the stateful streaming assembly and as the tests' reference for the
+  Catalyst plan.
 
 Output invariant (BASELINE.json): spans ordered, ``offset`` = position,
 object spans follow their source media span in ``obj_no`` order with
@@ -19,7 +18,6 @@ object spans follow their source media span in ``obj_no`` order with
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -162,8 +160,8 @@ def merge_doc_spans(spans: list[dict], table_rows, html_rows=()) -> list[dict]:
     """One document's merge: original spans + (media_ref, obj_no, okind,
     payload) object rows + (src_offset, obj_no, kind, text, media_ref)
     extracted-html rows → final renumbered span list.  The python-side
-    mirror of :func:`_merged_spans_expr`, shared by the pandas assembly and
-    the stateful streaming assembly."""
+    mirror of :func:`_merged_spans_expr`, used by the stateful streaming
+    assembly."""
     by_ref: dict[str, list] = {}
     for media_ref, _obj_no, okind, payload in sorted(table_rows):
         by_ref.setdefault(media_ref, []).append((okind, payload))
@@ -185,57 +183,3 @@ def merge_doc_spans(spans: list[dict], table_rows, html_rows=()) -> list[dict]:
                     {"kind": okind, "text": payload, "media_ref": s["media_ref"]}
                 )
     return [{**m, "offset": i} for i, m in enumerate(merged)]
-
-
-def assemble_spans_pandas(
-    docs: DataFrame, tables: DataFrame, html: DataFrame | None = None
-) -> DataFrame:
-    """Same semantics via cogroup().applyInPandas (SURVEY §2.10 stage 3).
-
-    cogroup takes exactly two groupings, so table objects and extracted-html
-    spans are harmonized into one object frame (html rows carry a non-null
-    ``src_offset``) and split back apart inside the merge function."""
-    tclean = tables.where((F.col("obj_no") >= 0) & F.col("error").isNull()).select(
-        "doc_id",
-        "media_ref",
-        "obj_no",
-        F.col("kind").alias("okind"),
-        "payload",
-        F.lit(None).cast("int").alias("src_offset"),
-    )
-    objs = tclean
-    if html is not None:
-        hclean = html.where((F.col("obj_no") >= 0) & F.col("error").isNull()).select(
-            "doc_id",
-            "media_ref",
-            "obj_no",
-            F.col("kind").alias("okind"),
-            F.col("text").alias("payload"),
-            "src_offset",
-        )
-        objs = tclean.unionByName(hclean)
-
-    def merge(docs_pdf: pd.DataFrame, objs_pdf: pd.DataFrame) -> pd.DataFrame:
-        trows, hrows = [], []
-        for _, t in objs_pdf.iterrows():
-            if pd.isna(t["src_offset"]):
-                trows.append((t["media_ref"], int(t["obj_no"]), t["okind"], t["payload"]))
-            else:
-                hrows.append(
-                    (int(t["src_offset"]), int(t["obj_no"]), t["okind"],
-                     t["payload"], t["media_ref"])
-                )
-        out_rows = [
-            {
-                "doc_id": d["doc_id"],
-                "spans": merge_doc_spans(list(d["spans"]), trows, hrows),
-            }
-            for _, d in docs_pdf.iterrows()
-        ]
-        return pd.DataFrame(out_rows, columns=["doc_id", "spans"])
-
-    return (
-        docs.groupBy("doc_id")
-        .cogroup(objs.groupBy("doc_id"))
-        .applyInPandas(merge, SPANS_SCHEMA)
-    )

@@ -90,7 +90,7 @@ def process_content_rows(
                 # page marker carries the page's decode+detect+ocr wall time
                 rows.append((did, ref, out_pno, -1, None, 0, None, None, ms))
                 pages_done += 1
-                for kind, n_items, payload in objects:
+                for kind, n_items, payload, _table in objects:
                     rows.append(
                         (did, ref, out_pno, obj_counter, kind, n_items,
                          payload, None, 0)

@@ -14,8 +14,8 @@ Scale properties (the design points graded against BASELINE.md):
   500 independent rows, so multi-hundred-page skew docs cannot stall a
   partition (SURVEY §4.3 — page-level explode replaces doc-level salting;
   ``repartition`` before decode spreads any residual blob-file skew).
-* **Catalyst-only assembly** by default (higher-order array functions);
-  ``applyInPandas`` variant retained for parity (operators/assemble.py).
+* **Catalyst-only assembly** (higher-order array functions,
+  operators/assemble.py).
 * **Resume** = anti-join against the committed output snapshot; idempotent.
 * **Lineage**: per-partition counters from page-marker rows
   (operators/metrics.py) — pages/tables/cells/errors.
@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from .operators import (
     TABLES_SCHEMA,
-    assemble_spans_pandas,
     assemble_spans_sql,
     filter_unprocessed,
     stage_metrics,
@@ -132,7 +131,6 @@ def extract_spans(
     docs: DataFrame,
     blobs: DataFrame | str | None,
     committed: DataFrame | None = None,
-    use_pandas_assembly: bool = False,
     metrics_path: str | None = None,
     run_id: str | None = None,
     repartition: int | None = None,
@@ -236,8 +234,7 @@ def extract_spans(
             # persist so the metrics write and the assembly share ONE parse
             pinned.append(rewritten.persist())
             write_table(html_stage_metrics(rewritten, run_id), metrics_path)
-    assemble = assemble_spans_pandas if use_pandas_assembly else assemble_spans_sql
-    return _done(assemble(todo, tables))
+    return _done(assemble_spans_sql(todo, tables))
 
 
 def unpersist_pipeline_cache(result: DataFrame) -> None:

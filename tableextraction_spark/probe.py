@@ -26,7 +26,7 @@ import re
 import struct
 import zlib
 
-import numpy as np  # noqa: F401  (kept for parity with sibling modules)
+from .media import sniff
 
 _U16B = struct.Struct(">H")
 _U32B = struct.Struct(">I")
@@ -41,12 +41,6 @@ _MP3_BITRATE_V2_L3 = [0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 1
 _MP3_RATES = {3: [44100, 48000, 32000], 2: [22050, 24000, 16000], 0: [11025, 12000, 8000]}
 
 
-def _is_tiff(head: bytes) -> bool:
-    from .tiff import is_tiff_magic  # the one shared magic definition
-
-    return is_tiff_magic(head)
-
-
 def _empty() -> dict:
     return {
         "format": "unknown", "kind": "unknown", "width": 0, "height": 0,
@@ -56,146 +50,107 @@ def _empty() -> dict:
 
 def probe_bytes(payload: bytes) -> dict:
     """Bytes → {format, kind, width, height, n_frames, duration_s,
-    sample_rate, codec} from headers only (no pixel/sample decode)."""
-    buf = bytes(payload[:64]) if len(payload) > 64 else bytes(payload)
-    full = bytes(payload)
+    sample_rate, codec} from headers only (no pixel/sample decode).  The
+    payload's ``media.FORMATS`` row names the format and kind once its
+    probe handler has parsed the header; the handler's fields fill (and
+    may refine) the rest.  A header it cannot parse stays format='unknown'
+    with codec='malformed'."""
     out = _empty()
+    fmt = sniff(payload)
+    if fmt is None:
+        return out
     try:
-        if buf[:4] == b"IMG1":
-            _m, w, h = struct.unpack_from("<4sII", full, 0)
-            out.update(format="img1", kind="image", width=w, height=h, n_frames=1)
-        elif buf[:8] == b"\x89PNG\r\n\x1a\n":
-            w, h = _U32B.unpack_from(full, 16)[0], _U32B.unpack_from(full, 20)[0]
-            out.update(format="png", kind="image", width=w, height=h, n_frames=1)
-        elif buf[:2] == b"\xff\xd8":
-            out.update(format="jpeg", kind="image", n_frames=1, **_probe_jpeg(full))
-        elif buf[:6] in (b"GIF87a", b"GIF89a"):
-            out.update(format="gif", **_probe_gif(full))
-        elif buf[:2] == b"BM":
-            w = struct.unpack_from("<i", full, 18)[0]
-            h = abs(struct.unpack_from("<i", full, 22)[0])
-            out.update(format="bmp", kind="image", width=w, height=h, n_frames=1)
-        elif _is_tiff(buf):
-            from .tiff import tiff_probe
-
-            # header-only: IFD tags of page 0 + page count, no pixel decode
-            out.update(format="tiff", kind="image", **tiff_probe(full))
-        elif buf[:4] == b"%PDF":
-            # Boundary-aware: '/Type /Pages' (the page-TREE nodes) must not
-            # count as pages — a bare substring count overstates every
-            # well-formed PDF by its Pages-node count.
-            out.update(format="pdf", kind="document",
-                       n_frames=len(_PDF_PAGE_RE.findall(full)))
-        elif buf[:4] == b"AUD1":
-            rate = _U32L.unpack_from(full, 4)[0]
-            n = (len(full) - 8) // 2
-            out.update(format="aud1", kind="audio", sample_rate=rate,
-                       duration_s=n / rate if rate else 0.0)
-        elif buf[:4] == b"RIFF" and buf[8:12] == b"WAVE":
-            out.update(format="wav", kind="audio", **_probe_wav(full))
-        elif buf[:4] == b"fLaC":
-            out.update(format="flac", kind="audio", **_probe_flac(full))
-        elif buf[:4] == b"RIFF" and buf[8:12] == b"AVI ":
-            out.update(format="avi", kind="video", **_probe_avi(full))
-        elif buf[:4] == b"VID1":
-            out.update(format="vid1", kind="video",
-                       n_frames=_U32L.unpack_from(full, 4)[0])
-        elif len(buf) >= 12 and buf[4:8] == b"ftyp":
-            out.update(format="mp4", kind="video", **_probe_mp4(full))
-        elif buf[:4] == b"\x1aE\xdf\xa3":
-            out.update(format="mkv/webm", kind="video", codec="ebml")
-            out.update(_probe_mkv(full))
-            try:
-                # frame count via the reader's cluster/block structure walk
-                # (element headers only; payload bytes are skipped by size)
-                from .mkv import _frame_ranges
-
-                out["n_frames"] = len(_frame_ranges(full)[0])
-            except (ValueError, NotImplementedError):
-                pass  # audio-only or truncated: keep the header-only fields
-        elif buf[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-            # must precede the Annex-B branch: an ICO directory magic is a
-            # 3-byte start code followed by NAL type 0, which the h264
-            # sniff rejects but the elif chain would swallow
-            from .ico import ico_probe
-
-            out.update(ico_probe(full))
-        elif buf[:3] == b"\x00\x00\x01" or buf[:4] == b"\x00\x00\x00\x01":
-            from .h264 import looks_like_annexb
-
-            if looks_like_annexb(full):
-                out.update(format="h264", kind="video")
-                out.update(_probe_h264_annexb(full))
-            else:
-                out.update(format="unknown", kind="unknown")
-        elif buf[:4] == b"OggS":
-            out.update(format="ogg", kind="audio")
-            out.update(_probe_ogg(full))
-        elif buf[:3] == b"ID3" or (len(buf) >= 2 and buf[0] == 0xFF and buf[1] & 0xE0 == 0xE0):
-            out.update(format="mp3", kind="audio", **_probe_mp3(full))
-        elif (buf[:4] == b"\x00\x00\x00\x0c" and buf[4:8] == b"jP  ") or \
-                (buf[:2] == b"\xff\x4f" and buf[2:4] == b"\xff\x51"):
-            # JPEG 2000: JP2 box file or raw T.800 codestream — header-only
-            # SIZ parse (width/height/components/depth)
-            from .jp2 import probe_jp2
-
-            info = probe_jp2(full)
-            out.update(format="jp2", kind="image", codec="jpeg2000",
-                       n_frames=1 if info else 0,
-                       width=info.get("width", 0),
-                       height=info.get("height", 0))
-            if not info:
-                out["codec"] = "malformed"
-        elif buf[:8] == b"\x97JB2\r\n\x1a\n":
-            # standalone JBIG2 file (T.88 Annex D.1): file header +
-            # segment sequence; page count from the header when known,
-            # else counted from page-information segments
-            out.update(format="jbig2", kind="image", codec="jbig2")
-            from .jbig2 import _parse_segment_headers
-
-            flags = buf[8] if len(buf) > 8 else 1
-            hdr_end = 9 if flags & 2 else 13
-            pages = 0
-            for _n, t, _p, _r, seg_body in _parse_segment_headers(full[hdr_end:]):
-                if t == 48:
-                    pages += 1
-                    if not out["width"] and len(seg_body) >= 8:
-                        out["width"] = _U32B.unpack_from(seg_body, 0)[0]
-                        out["height"] = _U32B.unpack_from(seg_body, 4)[0]
-            if not flags & 2 and len(full) >= 13:  # known page count
-                pages = _U32B.unpack_from(full, 9)[0]
-            out["n_frames"] = pages
-        # dataset/crawl container formats — a raw bucket listing mixes
-        # these in with media payloads, and the inventory must name them
-        elif buf[:5] == b"WARC/":
-            out.update(format="warc", kind="container", codec="warc")
-        elif buf[:4] == b"Obj\x01":
-            out.update(format="avro", kind="container", codec="avro-ocf")
-        elif buf[:4] == b"PAR1":
-            out.update(format="parquet", kind="container", codec="parquet")
-        elif buf[:2] == b"\x1f\x8b":
-            # peek the first member's first bytes (bounded inflate) to tell
-            # a .warc.gz crawl file from generic gzip; a stream that yields
-            # fewer than 5 bytes WITHOUT completing (d.eof) is truncated
-            # and must not inventory as a well-formed container (a valid
-            # empty-payload gzip completes and stays 'gzip')
-            d = zlib.decompressobj(wbits=31)
-            head = d.decompress(full[:4096], 5)
-            if len(head) < 5 and not d.eof:
-                out.update(format="gzip", kind="container",
-                           codec="truncated")
-            else:
-                out.update(
-                    format="warc.gz" if head == b"WARC/" else "gzip",
-                    kind="container", codec="gzip",
-                )
+        fields = fmt.probe(bytes(payload))
     except Exception:  # noqa: BLE001 — inventory counts malformed, never dies
         out["codec"] = "malformed"
+        return out
+    out.update(format=fmt.name, kind=fmt.kind)
+    out.update(fields)
     return out
+
+
+def _probe_img1(buf: bytes) -> dict:
+    _m, w, h = struct.unpack_from("<4sII", buf, 0)
+    return {"width": w, "height": h, "n_frames": 1}
+
+
+def _probe_png(buf: bytes) -> dict:
+    w, h = _U32B.unpack_from(buf, 16)[0], _U32B.unpack_from(buf, 20)[0]
+    return {"width": w, "height": h, "n_frames": 1}
+
+
+def _probe_bmp(buf: bytes) -> dict:
+    w = struct.unpack_from("<i", buf, 18)[0]
+    h = abs(struct.unpack_from("<i", buf, 22)[0])
+    return {"width": w, "height": h, "n_frames": 1}
+
+
+def _probe_pdf(buf: bytes) -> dict:
+    # Boundary-aware: '/Type /Pages' (the page-TREE nodes) must not count
+    # as pages — a bare substring count overstates every well-formed PDF
+    # by its Pages-node count.
+    return {"n_frames": len(_PDF_PAGE_RE.findall(buf))}
+
+
+def _probe_aud1(buf: bytes) -> dict:
+    rate = _U32L.unpack_from(buf, 4)[0]
+    n = (len(buf) - 8) // 2
+    return {"sample_rate": rate, "duration_s": n / rate if rate else 0.0}
+
+
+def _probe_vid1(buf: bytes) -> dict:
+    return {"n_frames": _U32L.unpack_from(buf, 4)[0]}
+
+
+def _probe_jp2(buf: bytes) -> dict:
+    """JPEG 2000 (JP2 box file or raw T.800 codestream): header-only SIZ
+    parse (width/height/components/depth)."""
+    from .jp2 import probe_jp2
+
+    info = probe_jp2(buf)
+    return {"codec": "jpeg2000" if info else "malformed",
+            "n_frames": 1 if info else 0,
+            "width": info.get("width", 0), "height": info.get("height", 0)}
+
+
+def _probe_jbig2(buf: bytes) -> dict:
+    """Standalone JBIG2 file (T.88 Annex D.1): file header + segment
+    sequence; page count from the header when known, else counted from
+    page-information segments."""
+    from .jbig2 import _parse_segment_headers
+
+    out = {"codec": "jbig2", "width": 0, "height": 0}
+    flags = buf[8] if len(buf) > 8 else 1
+    hdr_end = 9 if flags & 2 else 13
+    pages = 0
+    for _n, t, _p, _r, seg_body in _parse_segment_headers(buf[hdr_end:]):
+        if t == 48:
+            pages += 1
+            if not out["width"] and len(seg_body) >= 8:
+                out["width"] = _U32B.unpack_from(seg_body, 0)[0]
+                out["height"] = _U32B.unpack_from(seg_body, 4)[0]
+    if not flags & 2 and len(buf) >= 13:  # known page count
+        pages = _U32B.unpack_from(buf, 9)[0]
+    out["n_frames"] = pages
+    return out
+
+
+def _probe_gzip(buf: bytes) -> dict:
+    """Peek the first member's first bytes (bounded inflate) to tell a
+    .warc.gz crawl file from generic gzip; a stream that yields fewer than
+    5 bytes WITHOUT completing (d.eof) is truncated and must not inventory
+    as a well-formed container (a valid empty-payload gzip completes and
+    stays 'gzip')."""
+    d = zlib.decompressobj(wbits=31)
+    head = d.decompress(buf[:4096], 5)
+    if len(head) < 5 and not d.eof:
+        return {"codec": "truncated"}
+    return {"format": "warc.gz" if head == b"WARC/" else "gzip", "codec": "gzip"}
 
 
 def _probe_jpeg(buf: bytes) -> dict:
     """Marker walk to SOFx for dims + baseline/progressive tag."""
+    out = {"n_frames": 1}
     pos = 2
     while pos + 4 <= len(buf):
         if buf[pos] != 0xFF:
@@ -205,14 +160,14 @@ def _probe_jpeg(buf: bytes) -> dict:
             h = _U16B.unpack_from(buf, pos + 5)[0]
             w = _U16B.unpack_from(buf, pos + 7)[0]
             return {
-                "width": w, "height": h,
+                **out, "width": w, "height": h,
                 "codec": "progressive" if marker == 0xC2 else "baseline",
             }
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             pos += 2
             continue
         pos += 2 + _U16B.unpack_from(buf, pos + 2)[0]
-    return {}
+    return out
 
 
 def _probe_gif(buf: bytes) -> dict:
@@ -392,7 +347,9 @@ def _probe_mkv(buf: bytes) -> dict:
     (TimestampScale × Duration), first video/audio TrackEntry (CodecID,
     PixelWidth/Height, SamplingFrequency).  Header-only — Clusters (the
     payload data, 0x1F43B675) are never descended; bounded by the same
-    clamp-and-advance rules as the box/chunk walks."""
+    clamp-and-advance rules as the box/chunk walks.  The frame count comes
+    from the reader's cluster/block structure walk (element headers only;
+    payload bytes are skipped by size)."""
     out: dict = {}
     state = {"scale": 1_000_000, "dur": 0.0, "have_video": False,
              "have_audio": False}
@@ -451,6 +408,13 @@ def _probe_mkv(buf: bytes) -> dict:
         out["kind"] = "video"
     elif state["have_audio"]:
         out["kind"] = "audio"
+    out.setdefault("codec", "ebml")
+    try:
+        from .mkv import _frame_ranges
+
+        out["n_frames"] = len(_frame_ranges(buf)[0])
+    except (ValueError, NotImplementedError):
+        pass  # audio-only or truncated: keep the header-only fields
     return out
 
 
@@ -521,7 +485,7 @@ def _probe_ogg(buf: bytes) -> dict:
     duration from the LAST page's granule position — found by scanning the
     tail for 'OggS', so bytes touched stay O(header), not O(payload)."""
     out: dict = {"codec": "ogg"}
-    if len(buf) < 28 or buf[:4] != b"OggS":
+    if len(buf) < 28:
         return out
     nseg = buf[26]
     body = 27 + nseg

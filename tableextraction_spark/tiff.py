@@ -75,14 +75,14 @@ _BIT_REVERSE = bytes(
     int(f"{i:08b}"[::-1], 2) for i in range(256)
 )
 
-# the four VALID magic/order pairs (II is little-endian so 42/43 lead;
-# MM is big-endian so they trail) — the ONE definition shared by
-# media.decode_page, media.iter_pages, and probe.probe_bytes
-_TIFF_MAGICS = (b"II*\x00", b"II+\x00", b"MM\x00*", b"MM\x00+")
-
-
 def is_tiff_magic(head: bytes) -> bool:
-    return bytes(head[:4]) in _TIFF_MAGICS
+    """The ``tiff`` row's sniff in ``media.FORMATS`` — the one definition of
+    the four valid magic/byte-order pairs, which every consumer (page
+    decode, multi-page iteration, the header probe) routes through."""
+    from .media import sniff
+
+    fmt = sniff(head[:4])
+    return fmt is not None and fmt.name == "tiff"
 
 
 def _parse_header(buf: bytes) -> tuple[str, bool, int]:

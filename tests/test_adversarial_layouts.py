@@ -14,13 +14,18 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from tableextraction_spark.font import render_text
-from tableextraction_spark.kernel.page import process_page
+from tableextraction_spark.kernel.page import extract_objects
 
 PAGE_H, PAGE_W = 700, 800
 LINE_T = 2
 # cluster_tables ε-expands segment boxes by 3px each side (+ line thickness);
 # gaps ≥ 12 px must always separate components
 SAFE_GAP = 12
+
+
+def _tables(img):
+    """(bbox, cells, texts) of each table the kernel chain finds."""
+    return [t for _k, _n, _p, t in extract_objects(img) if t is not None]
 
 
 def blank():
@@ -59,7 +64,7 @@ def test_side_by_side_tables_separate(gap, c1, r1, c2, r2):
     draw_grid(canvas, 40, 60, c1, r1)
     x2 = 40 + c1 * 50 + LINE_T + gap
     draw_grid(canvas, x2, 60, c2, r2)
-    tables = process_page(canvas)
+    tables = _tables(canvas)
     assert len(tables) == 2
     # reading order: same y → left first
     assert len(tables[0][1]) == c1 * r1
@@ -77,7 +82,7 @@ def test_stacked_tables_separate(gap, c1, r1, c2, r2):
     draw_grid(canvas, 40, 50, c1, r1)
     y2 = 50 + r1 * 40 + LINE_T + gap
     draw_grid(canvas, 60, y2, c2, r2)
-    tables = process_page(canvas)
+    tables = _tables(canvas)
     assert len(tables) == 2
     assert len(tables[0][1]) == c1 * r1  # top table first
     assert len(tables[1][1]) == c2 * r2
@@ -87,7 +92,7 @@ def test_table_touching_page_margin():
     # grid starting at the exact (0, 0) corner — no clipping, full recovery
     canvas = blank()
     draw_grid(canvas, 0, 0, 3, 3, label="ab")
-    tables = process_page(canvas)
+    tables = _tables(canvas)
     assert len(tables) == 1
     bbox, cells, texts = tables[0]
     assert bbox[0] == 0 and bbox[1] == 0
@@ -100,7 +105,7 @@ def test_table_touching_bottom_right_margin():
     x0 = PAGE_W - 3 * 50 - LINE_T
     y0 = PAGE_H - 3 * 40 - LINE_T
     draw_grid(canvas, x0, y0, 3, 3)
-    tables = process_page(canvas)
+    tables = _tables(canvas)
     assert len(tables) == 1
     assert len(tables[0][1]) == 9
 
@@ -116,7 +121,7 @@ def test_nested_grid_detected_separately(margin, ic, ir):
     canvas = blank()
     draw_grid(canvas, 40, 50, 2, 2, col_w=300, row_h=250)
     draw_grid(canvas, 40 + margin, 50 + margin, ic, ir)
-    tables = process_page(canvas)
+    tables = _tables(canvas)
     assert len(tables) == 2
     assert len(tables[0][1]) == 4          # outer (top-left-most bbox) first
     assert len(tables[1][1]) == ic * ir    # inner intact
@@ -143,11 +148,11 @@ def test_per_table_independence(specs, gap):
         y += r * 40 + LINE_T + gap
     for x0, y0, c, r in placements:
         draw_grid(canvas, x0, y0, c, r, label="ab")
-    together = _result_tuples(process_page(canvas))
+    together = _result_tuples(_tables(canvas))
     assert len(together) == len(placements)
     for (x0, y0, c, r), combined in zip(placements, together):
         solo_canvas = blank()
         draw_grid(solo_canvas, x0, y0, c, r, label="ab")
-        solo = _result_tuples(process_page(solo_canvas))
+        solo = _result_tuples(_tables(solo_canvas))
         assert len(solo) == 1
         assert solo[0] == combined

@@ -14,11 +14,16 @@ from tableextraction_spark.fixtures.generate import (
     plan_doc,
     render_page,
 )
-from tableextraction_spark.kernel import assemble_table, process_page
+from tableextraction_spark.kernel import assemble_table, extract_objects
 from tableextraction_spark.media import decode_image
 
 
 N_DOCS = 20
+
+
+def _tables(img):
+    """(bbox, cells, texts) of each table the kernel chain finds."""
+    return [t for _k, _n, _p, t in extract_objects(img) if t is not None]
 
 
 def test_every_fixture_table_recovered_exactly():
@@ -28,7 +33,7 @@ def test_every_fixture_table_recovered_exactly():
         rng = _rng(doc_num * 2 + 1)
         for page in plan["pages"]:
             canvas, _ = render_page(page, rng)
-            got = process_page(canvas)
+            got = _tables(canvas)
             exp = [expected_table_json(tp) for tp in page["tables"]]
             assert len(got) == len(exp)
             for (_, cells, texts), e in zip(got, exp):
@@ -85,7 +90,7 @@ def test_property_full_grid_recovered(n_rows, n_cols, x0, y0, col_w, row_h):
         img[y0 + r * row_h : y0 + r * row_h + 2, x0 : x0 + n_cols * col_w + 2] = 0
     for c in range(n_cols + 1):
         img[y0 : y0 + n_rows * row_h + 2, x0 + c * col_w : x0 + c * col_w + 2] = 0
-    got = process_page(img)
+    got = _tables(img)
     assert len(got) == 1
     _, cells, _ = got[0]
     assert len(cells) == n_rows * n_cols

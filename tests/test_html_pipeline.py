@@ -1,5 +1,6 @@
 """End-to-end HTML main-content extraction through the Spark pipeline:
-mixed raster+markup corpora, SQL↔pandas assembly parity, raster-path
+mixed raster+markup corpora, Catalyst assembly against the driver-side
+merge, raster-path
 no-regression with the html flag on, and per-row failure isolation."""
 
 import pandas as pd
@@ -8,7 +9,13 @@ from pyspark.sql import functions as F
 
 from tableextraction_spark.fixtures import gen_corpus
 from tableextraction_spark.fixtures.html_gen import gen_html_doc
-from tableextraction_spark.pipeline import BLOBS_SCHEMA, DOCS_SCHEMA, extract_spans
+from tableextraction_spark.operators.html_extract import rewrite_html_spans
+from tableextraction_spark.pipeline import (
+    BLOBS_SCHEMA,
+    DOCS_SCHEMA,
+    detect_tables,
+    extract_spans,
+)
 
 N_RASTER = 6
 N_HTML = 8
@@ -44,15 +51,11 @@ def test_mixed_corpus_span_equality(spark, mixed):
         assert out[doc_id] == exp_t, doc_id
 
 
-def test_pandas_assembly_parity_with_html(spark, mixed):
+def test_catalyst_assembly_matches_driver_merge_with_html(spark, mixed, driver_merge):
     docs_df, blobs_df, _ = mixed
     sql_out = _tuples(extract_spans(spark, docs_df, blobs_df, html=True).collect())
-    pd_out = _tuples(
-        extract_spans(
-            spark, docs_df, blobs_df, html=True, use_pandas_assembly=True
-        ).collect()
-    )
-    assert sql_out == pd_out
+    rewritten = rewrite_html_spans(docs_df).select("doc_id", "spans").collect()
+    assert sql_out == driver_merge(rewritten, detect_tables(blobs_df).collect())
 
 
 def test_html_flag_noop_on_raster_corpus(spark):

@@ -36,9 +36,9 @@ def test_easyocr_fails_loud_at_resolve_time():
 
 def test_custom_strategy_flows_through_page_kernel(monkeypatch):
     """register + select a fake OCR strategy; the kernel's cell texts must
-    come from it — proving the seam reaches process_page."""
+    come from it — proving the seam reaches the kernel chain."""
     from tableextraction_spark.fixtures.generate import gen_doc
-    from tableextraction_spark.kernel.page import process_page
+    from tableextraction_spark.kernel.page import extract_objects
     from tableextraction_spark.media import decode_page
 
     calls = []
@@ -51,9 +51,10 @@ def test_custom_strategy_flows_through_page_kernel(monkeypatch):
     monkeypatch.setenv(ocr.ENV_VAR, "shouty")
     try:
         _, blobs, _ = gen_doc(0)
-        tables = process_page(decode_page(blobs[0]["content"]))
-        assert tables and calls
-        assert tables[0][2][0] == "CELL0"
+        objects = extract_objects(decode_page(blobs[0]["content"]))
+        assert objects and calls
+        _bbox, _cells, texts = objects[0][3]
+        assert texts[0] == "CELL0"
     finally:
         del ocr._STRATEGIES["shouty"]
 

@@ -1,14 +1,14 @@
 """Spark end-to-end: synthetic corpus → extract_spans → span-sequence equality
 (kind, text, media_ref, order) against the plan-derived golden spans — the
-BASELINE.json invariant — plus resume, metrics, and assembly-parity tests."""
+BASELINE.json invariant — plus resume, metrics, and assembly-reference tests."""
 
 import pytest
 
 from tableextraction_spark.fixtures import gen_corpus
-from tableextraction_spark.operators import assemble_spans_pandas
 from tableextraction_spark.pipeline import (
     BLOBS_SCHEMA,
     DOCS_SCHEMA,
+    detect_tables,
     extract_spans,
 )
 
@@ -54,10 +54,11 @@ def test_extract_spans_equality(spark, corpus):
         assert got[doc_id] == exp[doc_id], f"span mismatch in {doc_id}"
 
 
-def test_pandas_assembly_parity(spark, corpus):
+def test_catalyst_assembly_matches_driver_merge(spark, corpus, driver_merge):
     docs_df, blobs_df, expected = corpus
-    out = extract_spans(spark, docs_df, blobs_df, use_pandas_assembly=True).collect()
-    assert _span_tuples(out) == _expected_tuples(expected)
+    out = _span_tuples(extract_spans(spark, docs_df, blobs_df).collect())
+    assert out == driver_merge(docs_df.collect(), detect_tables(blobs_df).collect())
+    assert out == _expected_tuples(expected)
 
 
 def test_resume_anti_join_skips_committed(spark, corpus):

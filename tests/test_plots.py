@@ -86,7 +86,7 @@ def test_extract_objects_table_beats_plot():
         rng = _rng(doc_num * 2 + 1)
         for page in plan["pages"]:
             canvas, _ = render_page(page, rng)
-            kinds = {k for k, _n, _p in extract_objects(canvas)}
+            kinds = {k for k, _n, _p, _t in extract_objects(canvas)}
             if page["tables"]:
                 assert kinds == {"table"}
             elif page.get("plots"):

@@ -127,12 +127,13 @@ sys.path.insert(0, {repo!r})
 def work(args):
     seed, n = args
     from tableextraction_spark.fixtures.generate import gen_doc
-    from tableextraction_spark.media import decode_page
-    from tableextraction_spark.kernel import process_page
+    from tableextraction_spark.media import iter_pages
+    from tableextraction_spark.kernel import extract_objects
     i, pages = seed * 1000, 0
     while pages < n:
         for b in gen_doc(i)[1]:
-            process_page(decode_page(b["content"])); pages += 1
+            for _p, _n, page in iter_pages(b["content"]):
+                extract_objects(page); pages += 1
             if pages >= n: break
         i += 1
     return pages
